@@ -219,6 +219,20 @@ def test_connected_components_long_chain_converges_logarithmically(spark):
     assert steps <= 15, f"chain of {n} took {steps} supersteps"
 
 
+def test_connected_components_divergence_is_typed(spark):
+    """Running out of supersteps raises the same structured error as a
+    diverging rule fixpoint, not a bare RuntimeError."""
+    from unifydb_spark.operators.graph import connected_components
+    from unifydb_spark.query.parse import QueryError
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], ["src", "dst"]
+    )
+    with pytest.raises(QueryError) as exc:
+        connected_components(edges, max_iter=1)
+    assert exc.value.code == "fixpoint-divergence"
+
+
 def test_degree_assortativity_star_vs_clique(spark):
     """r121: a star is maximally disassortative (r = -1); a clique is
     regular (zero variance -> NULL r)."""

@@ -262,7 +262,12 @@ def test_language_id_english(spark):
 
 
 def test_kmeans_partition_invariant(emb):
-    from unifydb_spark.operators.similarity import kmeans_assign
+    import duckdb
+    import pandas as pd
+    from unifydb_spark.operators.similarity import (
+        kmeans_assign,
+        kmeans_assign_sql,
+    )
 
     a1 = {r["vec_id"]: r["cluster"]
           for r in kmeans_assign(emb, k=4, iters=2).collect()}
@@ -270,6 +275,17 @@ def test_kmeans_partition_invariant(emb):
           for r in kmeans_assign(emb.repartition(7), k=4, iters=2).collect()}
     assert a1 == a2  # exact-decimal arithmetic -> partition invariant
     assert set(a1.values()) <= set(range(4))
+    # the DuckDB twin unrolls the same iterations over the same (float32)
+    # values, so it must agree cluster-for-cluster
+    con = duckdb.connect()
+    con.register("emb_km", pd.DataFrame(
+        [(r["vec_id"], list(r["embedding"])) for r in emb.collect()],
+        columns=["vec_id", "embedding"],
+    ))
+    want = dict(con.execute(
+        kmeans_assign_sql("emb_km", k=4, iters=2, dim=4)
+    ).fetchall())
+    assert a1 == want
 
 
 def test_pack_sequences_invariants(spark):
@@ -2058,11 +2074,13 @@ def test_source_cap_auto_routes_by_measured_skew(spark):
         assert got == salted
 
 
-def test_ivf_pq_refine_matches_duckdb(spark):
-    """The ADC->exact-refine ladder (r148) matches its DuckDB twin on a
-    small deterministic corpus, and refine can only HELP: per query the
-    refined overlap >= the plain ADC overlap at identical probes (the
-    shortlist contains ADC's top-k by construction)."""
+@pytest.mark.parametrize("coarse", ["lowid", "kmeans"])
+def test_ivf_pq_refine_matches_duckdb(spark, coarse):
+    """The ADC->exact-refine ladder (r148; r153 with the trained coarse
+    quantizer) matches its DuckDB twin on a small deterministic corpus,
+    and refine can only HELP: per query the refined overlap >= the plain
+    ADC overlap at identical probes (the shortlist contains ADC's top-k
+    by construction)."""
     import duckdb
     import pandas as pd
     from unifydb_spark.operators.similarity import (
@@ -2080,7 +2098,7 @@ def test_ivf_pq_refine_matches_duckdb(spark):
     duckdb.register("emb_refine", pdf)
 
     kw = dict(n_centroids=8, nprobe=3, m=4, k=4, iters=2, n_queries=4,
-              topk=5, dim=8)
+              topk=5, dim=8, coarse=coarse)
     got = (
         ivf_pq_refine_topk(df, refine=15, **kw)
         .toPandas()

@@ -41,7 +41,11 @@ def test_graph_fixpoints_self_release(spark):
 
 
 def test_kmeans_self_release(spark):
-    from unifydb_spark.operators.similarity import kmeans_assign
+    from unifydb_spark.operators.similarity import (
+        ivf_coarse_assign,
+        kmeans_assign,
+        pq_codes,
+    )
 
     emb = spark.range(12).select(
         F.col("id").alias("vec_id"),
@@ -50,8 +54,13 @@ def test_kmeans_self_release(spark):
             (F.col("id") % 5 + 1).cast("float"),
         ).alias("embedding"),
     )
+    spark.catalog.clearCache()
     kmeans_assign(emb, k=2, iters=2).count()
     assert _cache_empty(spark), "kmeans_assign leaked exploded-matrix caches"
+    pq_codes(emb, m=2, k=2, iters=2, dim=2).count()
+    assert _cache_empty(spark), "pq_codes leaked exploded-matrix caches"
+    ivf_coarse_assign(emb, n_centroids=2, coarse="kmeans").count()
+    assert _cache_empty(spark), "ivf_coarse_assign leaked training caches"
 
 
 def test_dedup_text_release_on_demand(spark):

@@ -152,8 +152,9 @@ def connected_components(
     silently stalling at max_iter on a 1M-edge chain graph with
     diameter ~990 (user event chains grow with history length, exactly
     the 100 TB shape); with jumping the same graph converges in ~11
-    supersteps, and non-convergence now raises instead of returning
-    wrong labels. Returns (node, component).
+    supersteps, and non-convergence raises
+    ``QueryError("fixpoint-divergence")`` (the rule fixpoint's code)
+    instead of returning wrong labels. Returns (node, component).
 
     Physical strategy mirrors pagerank: with a broadcastable label table
     (<= 10M nodes) and edges >= 5x nodes, the edge relation is
@@ -243,10 +244,13 @@ def connected_components(
                 break
         instrument.note("cc_supersteps", supersteps)
         if not converged:
-            raise RuntimeError(
+            from unifydb_spark.query.parse import QueryError
+
+            raise QueryError(
+                "fixpoint-divergence",
                 f"connected_components did not converge in {max_iter} "
                 "supersteps — with pointer jumping this bounds component "
-                f"diameter by 2^{max_iter}; raise max_iter"
+                f"diameter by 2^{max_iter}; raise max_iter",
             )
         return labels
     finally:

@@ -304,6 +304,156 @@ SEMDEDUP_K_DIVISOR = 625
 IVF_CENTROID_DIVISOR = 160
 
 
+def _dsum(c):
+    """Exact DECIMAL(38,18) sum of a double expression, read back as a
+    double: order-independent, so partition placement never moves a bit
+    (the SQL twins spell the same cast chain)."""
+    return F.sum(c.cast("decimal(38,18)")).cast("double")
+
+
+def _sqnorms(ex: DataFrame, keys: "tuple[str, ...]") -> DataFrame:
+    """(vid, *keys, vn2): exact squared norm of each (sub)vector."""
+    return ex.groupBy("vid", *keys).agg(
+        _dsum(F.col("x") * F.col("x")).alias("vn2")
+    )
+
+
+def _nearest_step(
+    ex: DataFrame,
+    cent: DataFrame,
+    keys: "tuple[str, ...]" = (),
+    l2: bool = False,
+    vn: "DataFrame | None" = None,
+) -> DataFrame:
+    """Rank every centroid for every (sub)vector: `ex` is (vid, *keys,
+    d, x), `cent` is (*keys, cluster, d, m) — broadcast-sized, so the
+    corpus side never shuffles for the join. Cosine ranks by max
+    dot / (|v| |c|); `l2` ranks by min cn2 - 2·dot (|v|² is constant per
+    vector, so it cannot move the argmin and is never built). Ties go to
+    the lower cluster id. `vn` is a precomputed :func:`_sqnorms` of `ex`
+    (cosine only). Returns (vid, *keys, cluster, rn): rn = 1 is the
+    assignment, rn <= nprobe the probe set."""
+    cn = cent.groupBy(*keys, "cluster").agg(
+        _dsum(F.col("m") * F.col("m")).alias("cn2")
+    )
+    dots = (
+        ex.join(F.broadcast(cent), [*keys, "d"])
+        .groupBy("vid", *keys, "cluster")
+        .agg(_dsum(F.col("x") * F.col("m")).alias("dot"))
+    )
+    scored = dots.join(F.broadcast(cn), [*keys, "cluster"])
+    if l2:
+        order = (F.col("cn2") - 2.0 * F.col("dot")).asc()
+    else:
+        if vn is None:
+            vn = _sqnorms(ex, keys)
+        scored = scored.join(vn, ["vid", *keys])
+        order = (F.col("dot") / (F.sqrt("vn2") * F.sqrt("cn2"))).desc()
+    w = Window.partitionBy("vid", *keys).orderBy(order, F.col("cluster"))
+    return scored.select(
+        "vid", *keys, "cluster", F.row_number().over(w).alias("rn")
+    )
+
+
+def _mean_step(
+    ex: DataFrame, assign: DataFrame, keys: "tuple[str, ...]" = ()
+) -> DataFrame:
+    """(*keys, cluster, d, m): exact-decimal mean of each cluster's
+    members per coordinate `d` of `ex` (vid, *keys, d, x), given the
+    assignment (vid, *keys, cluster)."""
+    return (
+        ex.join(assign, ["vid", *keys])
+        .groupBy(*keys, "cluster", "d")
+        .agg((_dsum(F.col("x")) / F.count("x")).alias("m"))
+    )
+
+
+def _lloyd(
+    ex: DataFrame,
+    init: DataFrame,
+    iters: int,
+    keys: "tuple[str, ...]" = (),
+    l2: bool = False,
+) -> DataFrame:
+    """The one k-means training loop behind every trainer here
+    (kmeans_assign, pq_codes, the IVF coarse quantizer and the residual
+    PQ codebooks): `iters` rounds of :func:`_nearest_step` with a
+    :func:`_mean_step` between consecutive rounds. `ex` is (vid, *keys,
+    d, x); `init` the starting centroids (*keys, cluster, d, m). A
+    `subspace` key trains one independent codebook per subspace in the
+    SAME jobs (one shuffle round per iteration for all of them), and
+    plain k-means has no key. Returns the final assignment (vid, *keys,
+    cluster), eagerly checkpointed.
+
+    Determinism contract: init is caller-chosen by id (no sampling),
+    every dot and norm is a DECIMAL(38,18) sum (order-independent),
+    means are exact decimal sums / counts, and ties break to the lower
+    cluster id — so a DuckDB twin can unroll the same rounds and match
+    bit-for-bit at any partitioning.
+
+    No mean update follows the final assignment: nothing here consumes
+    it. A caller that needs centroids consistent with that assignment
+    (the IVF coarse quantizer, whose buckets and probes must rank
+    against the same means; the PQ codebook) runs one more
+    :func:`_mean_step` itself.
+
+    Checkpoints inside the loop are lazy (eager=False): the plan
+    truncation is the same, AQE still materializes every exchange stage
+    at checkpoint-call time, but the result-count job and the extra
+    cache-read pass disappear (one driver barrier per round instead of
+    two). Only the returned assignment is eager, so the persisted norms
+    can be released in `finally` before the caller reads it."""
+    if iters < 1:
+        raise ValueError(f"k-means needs iters >= 1, got {iters}")
+    vn = None if l2 else _sqnorms(ex, keys).persist()
+    cent = init.localCheckpoint(eager=False)
+    try:
+        for it in range(iters):
+            assign = (
+                _nearest_step(ex, cent, keys, l2, vn)
+                .filter("rn = 1")
+                .select("vid", *keys, "cluster")
+                .localCheckpoint(eager=(it == iters - 1))
+            )
+            if it < iters - 1:
+                cent = _mean_step(ex, assign, keys).localCheckpoint(eager=False)
+        return assign
+    finally:
+        if vn is not None:
+            vn.unpersist()
+
+
+def _explode_and_train(
+    emb: DataFrame, k: int, iters: int, id_col: str, vec_col: str,
+    sub: "int | None" = None,
+) -> DataFrame:
+    """Spherical k-means over `emb`'s vectors (init = the k lowest ids),
+    or over each `sub`-wide slice when `sub` is set. The exploded matrix
+    is persisted for the loop and released once the eager result is
+    built. Returns (vid, [subspace,] cluster)."""
+    ex = emb.select(
+        F.col(id_col).alias("vid"),
+        F.posexplode(F.col(vec_col)).alias("d", "x"),
+    ).withColumn("x", F.col("x").cast("double"))
+    keys = ()
+    if sub is not None:
+        keys = ("subspace",)
+        ex = ex.select(
+            "vid",
+            F.expr(f"d DIV {sub}").alias("subspace"),
+            F.expr(f"d % {sub}").alias("d"),
+            "x",
+        )
+    ex = _by_vid(ex).persist()
+    try:
+        init = ex.filter(F.col("vid") < k).select(
+            *keys, F.col("vid").alias("cluster"), "d", F.col("x").alias("m")
+        )
+        return _lloyd(ex, init, iters, keys)
+    finally:
+        ex.unpersist()
+
+
 def kmeans_assign(
     emb: DataFrame,
     k: int = 8,
@@ -312,95 +462,17 @@ def kmeans_assign(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Spherical k-means (cosine assignment), fixed iterations: a real
-    iterative training loop on the engine. Deterministic end to end —
-    init = the k lowest-id vectors, per-(vector, cluster) dots accumulate
-    in DECIMAL(38,18), centroid means are exact decimal sums / counts,
-    ties break to the lower cluster id — so the oracle can unroll the
-    same iterations in SQL and match exactly.
+    iterative training loop on the engine, init = the k lowest-id
+    vectors, deterministic under the :func:`_lloyd` contract so the
+    oracle unrolls the same iterations in SQL and matches exactly.
 
     Shape per iteration: exploded (vec, dim, x) join centroid (cluster,
     dim, m) -> one shuffle on (vec, cluster); centroid update is one
     groupBy (cluster, dim). Both map-side combinable; k and dim are
     constants, so cost is linear in vectors per iteration."""
-    ex = _by_vid(
-        emb.select(
-            F.col(id_col).alias("vid"),
-            F.posexplode(F.col(vec_col)).alias("dim", "x"),
-        ).withColumn("x", F.col("x").cast("double"))
-    ).persist()
-    # centroids as (cluster, dim, m) rows; init from the k lowest ids
-    # eager=False everywhere inside the loop: LogicalRDD plan truncation
-    # is identical, AQE still materializes every exchange stage at
-    # checkpoint-call time, but the result-count job and the extra
-    # cache-read pass per checkpoint disappear (one driver barrier per
-    # iteration instead of two). Only the RETURNED assignment is eager —
-    # the finally-unpersist below must not run before the chain resolves.
-    cent = (
-        ex.filter(F.col("vid") < k)
-        .select(F.col("vid").alias("cluster"), "dim", F.col("x").alias("m"))
-        .localCheckpoint(eager=False)
+    return _explode_and_train(emb, k, iters, id_col, vec_col).select(
+        F.col("vid").alias(id_col), "cluster"
     )
-    # per-vector norms: exact decimal sums (order-independent)
-    vnorm = ex.groupBy("vid").agg(
-        F.sum((F.col("x") * F.col("x")).cast("decimal(38,18)"))
-        .cast("double")
-        .alias("vn2")
-    ).persist()
-    assign = None
-    try:
-        for it in range(iters):
-            cnorm = cent.groupBy("cluster").agg(
-                F.sum((F.col("m") * F.col("m")).cast("decimal(38,18)"))
-                .cast("double")
-                .alias("cn2")
-            )
-            # cent is k x dim rows (knob-bounded) — broadcast so the
-            # corpus-side ex never shuffles for this join at any scale
-            dots = (
-                ex.join(F.broadcast(cent), "dim")
-                .groupBy("vid", "cluster")
-                .agg(
-                    F.sum((F.col("x") * F.col("m")).cast("decimal(38,18)"))
-                    .cast("double")
-                    .alias("dot")
-                )
-            )
-            scored = (
-                dots.join(F.broadcast(cnorm), "cluster")
-                .join(vnorm, "vid")
-                .withColumn(
-                    "cos", F.col("dot") / (F.sqrt("vn2") * F.sqrt("cn2"))
-                )
-            )
-            w = Window.partitionBy("vid").orderBy(F.col("cos").desc(), F.col("cluster"))
-            assign = (
-                scored.withColumn("rn", F.row_number().over(w))
-                .filter("rn = 1")
-                .select("vid", "cluster")
-                .localCheckpoint(eager=(it == iters - 1))
-            )
-            if it < iters - 1:
-                # the final round's centroid update is dead computation —
-                # nothing consumes it, so it is never built (pq_codes and
-                # _pq_train already guard the same way)
-                cent = (
-                    ex.join(assign, "vid")
-                    .groupBy("cluster", "dim")
-                    .agg(
-                        (
-                            F.sum(F.col("x").cast("decimal(38,18)")).cast(
-                                "double"
-                            )
-                            / F.count("x")
-                        ).alias("m")
-                    )
-                    .localCheckpoint(eager=False)
-                )
-        return assign.select(F.col("vid").alias(id_col), "cluster")
-    finally:
-        # loop intermediates only; `assign` is checkpointed each iteration
-        ex.unpersist()
-        vnorm.unpersist()
 
 
 def _kmeans_ctes(
@@ -1254,10 +1326,9 @@ def pq_codes(
     """Product-quantization codes (Jégou, Douze & Schmid 2011 — the
     IVF-PQ half FAISS pairs with the IVF bucketing already graded as
     q28): split each vector into `m` contiguous subspaces of dim/m
-    dims, learn a k-centroid sub-codebook per subspace with the SAME
-    deterministic spherical k-means as :func:`kmeans_assign` (decimal
-    dots, lowest-id init, low-id tie-break), and emit one (id,
-    subspace, code) row per vector per subspace.
+    dims, learn a k-centroid sub-codebook per subspace with the same
+    spherical k-means as :func:`kmeans_assign` (lowest-id init), and
+    emit one (id, subspace, code) row per vector per subspace.
 
     Why it matters at 100 TB: the codes table stores m ceil(log2 k)-bit
     integers per vector instead of dim floats — 16x smaller at the
@@ -1268,106 +1339,18 @@ def pq_codes(
     runs over dim/m-wide slices — the SAME total flops as one full-dim
     run per iteration, all combinable aggregations.
 
-    Deterministic end to end, so the DuckDB twin
-    (:func:`pq_codes_sql`) unrolls the identical iterations per
-    subspace and matches code-for-code.
+    The DuckDB twin (:func:`pq_codes_sql`) unrolls the identical
+    iterations per subspace and matches code-for-code.
 
     All m sub-quantizers train in ONE batched job set, not m
-    sequential loops: every relation carries `subspace` as a key
-    (vector explode → (vid, subspace, subdim, x); centroids →
-    (subspace, cluster, subdim, m); assignment windows partition by
-    (vid, subspace)), so one iteration = one shuffle round for ALL
-    subspaces — the per-subspace math is identical to
-    :func:`kmeans_assign` on the slice, but the job count stops
-    scaling with m (measured: the sequential loop cost 19.5s at 500
-    vectors from 8x the fixed per-job overhead alone)."""
+    sequential loops: `subspace` is the :func:`_lloyd` key, so one
+    iteration = one shuffle round for ALL subspaces and the job count
+    stops scaling with m (measured: the sequential loop cost 19.5s at
+    500 vectors from 8x the fixed per-job overhead alone)."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    sub = dim // m
-    from unifydb_spark.resources import tracked_persist
-
-    ex = (
-        emb.select(
-            F.col(id_col).alias("vid"),
-            F.posexplode(F.col(vec_col)).alias("d", "x"),
-        )
-        .withColumn("x", F.col("x").cast("double"))
-        .select(
-            "vid",
-            F.expr(f"d DIV {sub}").alias("subspace"),
-            F.expr(f"d % {sub}").alias("sd"),
-            "x",
-        )
-    )
-    # hash(vid) clusters every groupBy(vid, subspace)/window(vid,
-    # subspace) below onto one reused layout AND floors parallelism
-    # (hash(vid) satisfies the clustered distribution of any key set
-    # containing vid)
-    ex = tracked_persist(_by_vid(ex))
-    # intra-loop checkpoints are lazy (same plan truncation, one fewer
-    # driver job per iteration — see kmeans_assign); the returned final
-    # assignment stays eager
-    cent = (
-        ex.filter(F.col("vid") < k)
-        .select(
-            "subspace", F.col("vid").alias("cluster"), "sd", F.col("x").alias("m")
-        )
-        .localCheckpoint(eager=False)
-    )
-    vnorm = tracked_persist(
-        ex.groupBy("vid", "subspace").agg(
-            F.sum((F.col("x") * F.col("x")).cast("decimal(38,18)"))
-            .cast("double")
-            .alias("vn2")
-        )
-    )
-    assign = None
-    for it in range(iters):
-        cnorm = cent.groupBy("subspace", "cluster").agg(
-            F.sum((F.col("m") * F.col("m")).cast("decimal(38,18)"))
-            .cast("double")
-            .alias("cn2")
-        )
-        # cent is m x k x sub rows (knob-bounded) — broadcast, never
-        # shuffle the corpus side for it
-        dots = (
-            ex.join(F.broadcast(cent), ["subspace", "sd"])
-            .groupBy("vid", "subspace", "cluster")
-            .agg(
-                F.sum((F.col("x") * F.col("m")).cast("decimal(38,18)"))
-                .cast("double")
-                .alias("dot")
-            )
-        )
-        scored = (
-            dots.join(F.broadcast(cnorm), ["subspace", "cluster"])
-            .join(vnorm, ["vid", "subspace"])
-            .withColumn("cos", F.col("dot") / (F.sqrt("vn2") * F.sqrt("cn2")))
-        )
-        w = Window.partitionBy("vid", "subspace").orderBy(
-            F.col("cos").desc(), F.col("cluster")
-        )
-        assign = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter("rn = 1")
-            .select("vid", "subspace", "cluster")
-            .localCheckpoint(eager=(it == iters - 1))
-        )
-        if it < iters - 1:
-            # the final round's centroid update is dead computation —
-            # nothing consumes it, so it is never built
-            cent = (
-                ex.join(assign, ["vid", "subspace"])
-                .groupBy("subspace", "cluster", "sd")
-                .agg(
-                    (
-                        F.sum(F.col("x").cast("decimal(38,18)")).cast("double")
-                        / F.count("x")
-                    ).alias("m")
-                )
-                .localCheckpoint(eager=False)
-            )
-    return assign.select(
+    codes = _explode_and_train(emb, k, iters, id_col, vec_col, dim // m)
+    return codes.select(
         F.col("vid").alias(id_col),
         "subspace",
         F.col("cluster").cast("bigint").alias("code"),
@@ -1442,21 +1425,11 @@ def pq_adc_recall(
     from unifydb_spark.resources import tracked_persist
 
     ex = tracked_persist(_by_vid(ex))
-    codebook = (
-        ex.join(
-            codes.select(
-                F.col(id_col).alias("vid"), "subspace", "code"
-            ),
-            ["vid", "subspace"],
-        )
-        .groupBy("subspace", "code", "d")
-        .agg(
-            (
-                F.sum(F.col("x").cast("decimal(38,18)")).cast("double")
-                / F.count("x")
-            ).alias("mval")
-        )
-    )
+    codebook = _mean_step(
+        ex,
+        codes.withColumnsRenamed({id_col: "vid", "code": "cluster"}),
+        ("subspace",),
+    ).withColumnsRenamed({"cluster": "code", "m": "mval"})
     # qex is n_queries x dim rows (knob-bounded) — broadcast it into the
     # corpus-side scans so they keep their layout at any scale
     qex = F.broadcast(
@@ -1521,17 +1494,14 @@ def _coarse_kmeans_train(
     r11 ask #1 — FAISS *trains* the coarse quantizer; the lowest-id-vector
     centroids produced degenerate bucket structure: 78/80 true neighbors
     in the rank-1 bucket and a flat nprobe dial at sf0.1). Input `ex`:
-    exploded vectors (vid, d, x). Deterministic exactly like
-    :func:`kmeans_assign` (q72's graded contract): init = the
-    `n_centroids` lowest-id vectors, per-(vector, centroid) dots and
-    norms accumulate in DECIMAL(38,18) (order-independent), assignment
-    is max cosine with ties to the lower centroid id, means are exact
-    decimal sums / counts. Returns the FINAL trained means as exploded
-    (centroid_id, d, cx) — broadcast-sized (n_centroids x dim) at any
-    corpus scale. Callers assign against the returned means with
-    :func:`_cosine_scored`, so assignment is consistent with the final
-    centroids (kmeans_assign's last assignment predates its last mean
-    update — an IVF index needs the two consistent).
+    exploded vectors (vid, d, x); init = the `n_centroids` lowest-id
+    vectors, then :func:`_lloyd`. Returns exploded means (centroid_id,
+    d, cx) — broadcast-sized (n_centroids x dim) at any corpus scale.
+
+    The returned means are recomputed from the FINAL assignment (one
+    more mean step past the loop): callers assign the corpus and rank
+    query probes against them with :func:`_coarse_ranked`, and an IVF
+    index needs its buckets consistent with the centroids it persists.
 
     `sample_stride > 1` trains on the deterministic 1/stride stride
     sample (vid % stride == 0; init = the first n_centroids SAMPLE ids,
@@ -1546,89 +1516,24 @@ def _coarse_kmeans_train(
         if sample_stride <= 1
         else ex.filter(F.col("vid") % sample_stride == 0)
     )
-    cent = (
-        train_ex.filter(F.col("vid") < n_centroids * max(1, sample_stride))
-        .select(F.col("vid").alias("centroid_id"), "d", F.col("x").alias("cx"))
+    init = train_ex.filter(
+        F.col("vid") < n_centroids * max(1, sample_stride)
+    ).select(F.col("vid").alias("cluster"), "d", F.col("x").alias("m"))
+    assign = _lloyd(train_ex, init, iters)
+    return (
+        _mean_step(train_ex, assign)
+        .withColumnsRenamed({"cluster": "centroid_id", "m": "cx"})
         .localCheckpoint(eager=False)
     )
-    # persist the per-vector norms: every iteration's _cosine_scored
-    # re-executes this corpus-side aggregate otherwise (exchange reuse
-    # does not cross checkpointed executions) — kmeans_assign/pq_codes
-    # already persist theirs
-    vn = train_ex.groupBy("vid").agg(
-        F.sum((F.col("x") * F.col("x")).cast("decimal(38,18)"))
-        .cast("double")
-        .alias("vn2")
-    ).persist()
-    try:
-        for it in range(iters):
-            sc = _cosine_scored(train_ex, cent, vn)
-            a = (
-                sc.withColumn(
-                    "rn",
-                    F.row_number().over(
-                        Window.partitionBy("vid").orderBy(
-                            F.col("cos").desc(), F.col("centroid_id")
-                        )
-                    ),
-                )
-                .filter("rn = 1")
-                .select("vid", "centroid_id")
-            )
-            # intermediate rounds are lazy (see kmeans_assign); the
-            # RETURNED means are eager so the unpersist below is safe
-            cent = (
-                train_ex.join(a, "vid")
-                .groupBy("centroid_id", "d")
-                .agg(
-                    (
-                        F.sum(F.col("x").cast("decimal(38,18)")).cast("double")
-                        / F.count("x")
-                    ).alias("cx")
-                )
-                .localCheckpoint(eager=(it == iters - 1))
-            )
-        return cent
-    finally:
-        vn.unpersist()
 
 
-def _cosine_scored(
-    ex: DataFrame, cex: DataFrame, vn: "DataFrame | None" = None
-) -> DataFrame:
-    """Cosine of every vector against every coarse centroid, DECIMAL
-    folds over the exploded dims (order-independent — the contract the
-    SQL twins replicate verbatim). `ex` = (vid, d, x), `cex` = exploded
-    centroids (centroid_id, d, cx; broadcast-sized). Returns (vid,
-    centroid_id, cos). One shuffle on (vid, centroid_id), map-side
-    combinable; the centroid side broadcasts."""
-    cn = cex.groupBy("centroid_id").agg(
-        F.sum((F.col("cx") * F.col("cx")).cast("decimal(38,18)"))
-        .cast("double")
-        .alias("cn2")
-    )
-    if vn is None:
-        vn = ex.groupBy("vid").agg(
-            F.sum((F.col("x") * F.col("x")).cast("decimal(38,18)"))
-            .cast("double")
-            .alias("vn2")
-        )
-    dots = (
-        ex.join(F.broadcast(cex), "d")
-        .groupBy("vid", "centroid_id")
-        .agg(
-            F.sum((F.col("x") * F.col("cx")).cast("decimal(38,18)"))
-            .cast("double")
-            .alias("dot")
-        )
-    )
-    return (
-        dots.join(F.broadcast(cn), "centroid_id")
-        .join(vn, "vid")
-        .withColumn(
-            "cos", F.col("dot") / (F.sqrt(F.col("vn2")) * F.sqrt(F.col("cn2")))
-        )
-    )
+def _coarse_ranked(ex: DataFrame, cex: DataFrame) -> DataFrame:
+    """(vid, centroid_id, rn): every vector of `ex` (vid, d, x) ranked
+    against the exploded coarse centroids `cex` (centroid_id, d, cx) by
+    :func:`_nearest_step` cosine — rn = 1 is its bucket."""
+    return _nearest_step(
+        ex, cex.withColumnsRenamed({"centroid_id": "cluster", "cx": "m"})
+    ).withColumnRenamed("cluster", "centroid_id")
 
 
 def ivf_coarse_assign(
@@ -1657,15 +1562,7 @@ def ivf_coarse_assign(
     ).withColumn("x", F.col("x").cast("double"))
     cex = _coarse_kmeans_train(ex, n_centroids, coarse_iters)
     return (
-        _cosine_scored(ex, cex)
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("vid").orderBy(
-                    F.col("cos").desc(), F.col("centroid_id")
-                )
-            ),
-        )
+        _coarse_ranked(ex, cex)
         .filter("rn = 1")
         .select(F.col("vid").alias(id_col), "centroid_id")
     )
@@ -1735,17 +1632,11 @@ def ivf_pq_topk(
     is part of the graded result itself, not a prose claim.
 
     Determinism contract: coarse assignment/probes reuse the ordered
-    double folds of ivf_topk (proven exact vs DuckDB in q28); residual
-    k-means accumulates every dot/norm in DECIMAL(38,18)
-    (order-independent), assigns by min L2 (cn2 - 2·dot; the vector's
-    own rn2 term is constant per vector and cannot change the argmin),
-    ties to the lower cluster id, and inits sub-codebook j from the
-    residuals of ids [n_centroids, n_centroids + k) — the first k ids
-    whose residuals are NOT identically zero (ids < n_centroids ARE
-    the coarse centroids, so their residuals vanish and would
-    degenerate the init). ADC and exact scores are decimal folds with
-    ties to the lower neighbor id. The DuckDB twin
-    (:func:`ivf_pq_topk_sql`) unrolls the identical plan.
+    double folds of ivf_topk (proven exact vs DuckDB in q28); the
+    residual codebooks are L2 :func:`_lloyd` runs (see :func:`_pq_train`
+    for the init). ADC and exact scores are decimal folds with ties to
+    the lower neighbor id. The DuckDB twin (:func:`ivf_pq_topk_sql`)
+    unrolls the identical plan.
 
     `n_centroids=None` derives auto_k(n, IVF_CENTROID_DIVISOR, lo=16)
     from one cheap count — the k-tracks-n default that keeps the
@@ -1796,13 +1687,7 @@ def ivf_pq_topk(
                 )
             )
         )
-        scoredc = _cosine_scored(ex, cex)
-        wv = Window.partitionBy("vid").orderBy(
-            F.col("cos").desc(), F.col("centroid_id")
-        )
-        ranked = tracked_persist(
-            scoredc.withColumn("rn", F.row_number().over(wv))
-        )
+        ranked = tracked_persist(_coarse_ranked(ex, cex))
         assigned = ranked.filter(F.col("rn") == 1).select("vid", "centroid_id")
         probes = F.broadcast(
             ranked.filter(
@@ -1929,86 +1814,34 @@ def _pq_train(
     """The residual-PQ training kernel shared by :func:`ivf_pq_topk`
     (oracle-graded) and :func:`ivf_pq_index_write` (persisted index) —
     one code path. Input `rex`: exploded residuals (vid, centroid_id,
-    d, subspace, sd, rx). Per-subspace L2 k-means, all m subspaces in
-    one batched job set (subspace as a key); init = the residuals of
-    ids [n_centroids, n_centroids + k) — the first k ids whose
-    residuals are not identically zero (ids < n_centroids ARE the
-    coarse centroids). Returns (codes, codebook): codes (vid, subspace,
-    code); codebook = mean residual of each code's members at full-dim
-    coordinates (subspace, code, d, mval) — one more deterministic
-    update past the final assignment, the r145 pattern."""
-    cent = (
-        rex.filter(
-            (F.col("vid") >= n_centroids) & (F.col("vid") < n_centroids + k)
-        )
-        .select(
-            "subspace",
-            (F.col("vid") - n_centroids).alias("cluster"),
-            "sd",
-            F.col("rx").alias("cm"),
-        )
-        .localCheckpoint(eager=False)
+    d, subspace, sd, rx). Per-subspace L2 :func:`_lloyd` keyed by
+    subspace; init = the residuals of ids [n_centroids, n_centroids +
+    k) — the first k ids whose residuals are not identically zero (ids
+    < n_centroids ARE the coarse centroids). Returns (codes, codebook):
+    codes (vid, subspace, code); codebook = mean residual of each
+    code's members at full-dim coordinates (subspace, code, d, mval) —
+    one more mean step past the final assignment, the r145 pattern."""
+    sex = rex.select(
+        "vid", "subspace", F.col("sd").alias("d"), F.col("rx").alias("x")
     )
-    codes = None
-    for it in range(iters):
-        cn2 = cent.groupBy("subspace", "cluster").agg(
-            F.sum((F.col("cm") * F.col("cm")).cast("decimal(38,18)"))
-            .cast("double")
-            .alias("cn2")
-        )
-        # cent is m x k x sub rows (knob-bounded) — broadcast so the
-        # corpus-side residuals never shuffle for this join
-        dots = (
-            rex.join(F.broadcast(cent), ["subspace", "sd"])
-            .groupBy("vid", "subspace", "cluster")
-            .agg(
-                F.sum((F.col("rx") * F.col("cm")).cast("decimal(38,18)"))
-                .cast("double")
-                .alias("dot")
-            )
-        )
-        # argmin ||r - c||^2 = argmin (cn2 - 2*dot): rn2 is per-vector
-        # constant, so it never changes the winner and is never built
-        wa = Window.partitionBy("vid", "subspace").orderBy(
-            (F.col("cn2") - 2.0 * F.col("dot")).asc(), F.col("cluster")
-        )
-        # intra-loop checkpoints are lazy (see kmeans_assign); the final
-        # codes stay eager — both returned values derive from them
-        codes = (
-            dots.join(F.broadcast(cn2), ["subspace", "cluster"])
-            .withColumn("rn", F.row_number().over(wa))
-            .filter("rn = 1")
-            .select("vid", "subspace", F.col("cluster").alias("code"))
-            .localCheckpoint(eager=(it == iters - 1))
-        )
-        if it < iters - 1:
-            cent = (
-                rex.join(
-                    codes.select(
-                        "vid", "subspace", F.col("code").alias("cluster")
-                    ),
-                    ["vid", "subspace"],
-                )
-                .groupBy("subspace", "cluster", "sd")
-                .agg(
-                    (
-                        F.sum(F.col("rx").cast("decimal(38,18)")).cast("double")
-                        / F.count("rx")
-                    ).alias("cm")
-                )
-                .localCheckpoint(eager=False)
-            )
-    cb = (
-        rex.join(codes, ["vid", "subspace"])
-        .groupBy("subspace", "code", "d")
-        .agg(
-            (
-                F.sum(F.col("rx").cast("decimal(38,18)")).cast("double")
-                / F.count("rx")
-            ).alias("mval")
-        )
+    init = sex.filter(
+        (F.col("vid") >= n_centroids) & (F.col("vid") < n_centroids + k)
+    ).select(
+        "subspace",
+        (F.col("vid") - n_centroids).alias("cluster"),
+        "d",
+        F.col("x").alias("m"),
     )
-    return codes, cb
+    assign = _lloyd(sex, init, iters, ("subspace",), l2=True)
+    cb = _mean_step(
+        rex.select("vid", "subspace", "d", F.col("rx").alias("x")),
+        assign,
+        ("subspace",),
+    )
+    return (
+        assign.withColumnRenamed("cluster", "code"),
+        cb.withColumnsRenamed({"cluster": "code", "m": "mval"}),
+    )
 
 
 def _adc_scored(
@@ -2167,15 +2000,7 @@ def ivf_pq_index_write(
                 _coarse_kmeans_train(ex, n_centroids, coarse_iters)
             )
             assigned = tracked_persist(
-                _cosine_scored(ex, cex)
-                .withColumn(
-                    "rn",
-                    F.row_number().over(
-                        Window.partitionBy("vid").orderBy(
-                            F.col("cos").desc(), F.col("centroid_id")
-                        )
-                    ),
-                )
+                _coarse_ranked(ex, cex)
                 .filter(F.col("rn") == 1)
                 .select("vid", "centroid_id")
             )
@@ -2343,38 +2168,10 @@ def ivf_pq_index_append(
         n_new = ex.select("vid").distinct().count()
         if not n_new:
             return 0
-        # coarse assign vs the frozen centroids (decimal-fold cosine)
-        vn = ex.groupBy("vid").agg(
-            F.sum((F.col("x") * F.col("x")).cast("decimal(38,18)"))
-            .cast("double")
-            .alias("vn2")
-        )
-        cn = cex.groupBy("centroid_id").agg(
-            F.sum((F.col("cx") * F.col("cx")).cast("decimal(38,18)"))
-            .cast("double")
-            .alias("cn2")
-        )
-        ccos = (
-            ex.join(cex, "d")
-            .groupBy("vid", "centroid_id")
-            .agg(
-                F.sum((F.col("x") * F.col("cx")).cast("decimal(38,18)"))
-                .cast("double")
-                .alias("dot")
-            )
-            .join(vn, "vid")
-            .join(cn, "centroid_id")
-            .withColumn("c", F.col("dot") / (F.sqrt("vn2") * F.sqrt("cn2")))
-        )
-        assigned = (
-            ccos.withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("vid").orderBy(
-                        F.col("c").desc(), F.col("centroid_id")
-                    )
-                ),
-            )
+        # coarse assign vs the frozen centroids, encode the residuals vs
+        # the frozen codebooks (argmin ||r - codeword||^2)
+        assigned = tracked_persist(
+            _coarse_ranked(ex, cex)
             .filter("rn = 1")
             .select("vid", "centroid_id")
         )
@@ -2384,40 +2181,23 @@ def ivf_pq_index_append(
             .join(cex, ["centroid_id", "d"])
             .select(
                 "vid",
-                "centroid_id",
-                "d",
                 F.expr(f"d DIV {sub}").alias("subspace"),
-                rx.alias("rx"),
-            )
-        )
-        # encode vs the frozen codebooks: argmin ||r - codeword||^2
-        cbn = cb.groupBy("subspace", "code").agg(
-            F.sum((F.col("mval") * F.col("mval")).cast("decimal(38,18)"))
-            .cast("double")
-            .alias("cn2")
-        )
-        dots = (
-            rex.join(cb, ["subspace", "d"])
-            .groupBy("vid", "centroid_id", "subspace", "code")
-            .agg(
-                F.sum((F.col("rx") * F.col("mval")).cast("decimal(38,18)"))
-                .cast("double")
-                .alias("dot")
+                "d",
+                rx.alias("x"),
             )
         )
         codes = (
-            dots.join(F.broadcast(cbn), ["subspace", "code"])
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("vid", "subspace").orderBy(
-                        (F.col("cn2") - 2.0 * F.col("dot")).asc(),
-                        F.col("code"),
-                    )
-                ),
+            _nearest_step(
+                rex,
+                cb.withColumnsRenamed({"code": "cluster", "mval": "m"}),
+                ("subspace",),
+                l2=True,
             )
             .filter("rn = 1")
-            .select("vid", "subspace", "code", "centroid_id")
+            .join(assigned, "vid")
+            .select(
+                "vid", "subspace", F.col("cluster").alias("code"), "centroid_id"
+            )
         )
         codes.write.mode("append").partitionBy("centroid_id").parquet(
             f"{dpath}/codes"
@@ -2932,13 +2712,7 @@ def ivf_pq_refine_topk(
                 _coarse_kmeans_train(ex, n_centroids, coarse_iters)
             )
         )
-        scoredc = _cosine_scored(ex, cex)
-        wv = Window.partitionBy("vid").orderBy(
-            F.col("cos").desc(), F.col("centroid_id")
-        )
-        ranked = tracked_persist(
-            scoredc.withColumn("rn", F.row_number().over(wv))
-        )
+        ranked = tracked_persist(_coarse_ranked(ex, cex))
         assigned = ranked.filter(F.col("rn") == 1).select("vid", "centroid_id")
         probes = F.broadcast(
             ranked.filter(

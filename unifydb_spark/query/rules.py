@@ -24,7 +24,6 @@ is rejected at compile time.
 
 from __future__ import annotations
 
-import contextlib
 import itertools
 import threading
 from typing import Optional
@@ -75,13 +74,6 @@ _FRONTIER_SESSION_ROWS = 100_000
 # (or a second fixpoint) concurrently on ONE SparkSession can never be
 # planned at another query's narrowed width (pinned by
 # tests/test_scale_proofs.py::test_concurrent_fixpoints_shared_session).
-# `_frontier_shuffle` below remains only as the conf-mutating FALLBACK
-# for environments where the plan re-bind hook is unavailable; the lock
-# serializes that path (interleaved fixpoints must not read each other's
-# narrowed value as "the session setting").
-_FRONTIER_LOCK = threading.RLock()  # RLock: nested fixpoints (cross-SCC
-# rule calls execute driver-side during compilation) must not self-deadlock
-
 _PRIVATE_SESSIONS = threading.local()  # thread-local: concurrent fixpoints
 # get distinct private sessions, so no conf race without any lock
 
@@ -118,8 +110,13 @@ def _frontier_checkpoint(spark, df, hint: Optional[int]):
     the plan to the thread's private session, narrow THAT session's
     shuffle width, materialize, and re-bind the resulting LogicalRDD to
     the calling session. No-op width when the hint is unknown or big
-    enough to want the session setting; falls back to the locked
-    conf-mutation scope if the re-bind hook is unavailable."""
+    enough to want the session setting.
+
+    The hint must bound every shuffle INPUT in the narrowed plan, not
+    just the frontier rows — callers checkpoint round-invariant
+    relations (e.g. magic-step EDB distincts) BEFORE the round and fold
+    their counted sizes into the hint, so a full-table shuffle can never
+    be funneled through a 1-partition exchange."""
     try:
         session = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:
@@ -127,49 +124,16 @@ def _frontier_checkpoint(spark, df, hint: Optional[int]):
     want = session if hint is None else _frontier_parts(session, int(hint))
     if want >= session:
         return df.localCheckpoint(eager=True)
-    try:
-        priv = _narrow_session(spark)
-        priv.conf.set("spark.sql.shuffle.partitions", str(want))
-        ck = _rebind(df, priv).localCheckpoint(eager=True)
-        return _rebind(ck, spark)
-    except Exception:
-        with _frontier_shuffle(spark, hint):
-            return df.localCheckpoint(eager=True)
+    priv = _narrow_session(spark)
+    priv.conf.set("spark.sql.shuffle.partitions", str(want))
+    ck = _rebind(df, priv).localCheckpoint(eager=True)
+    return _rebind(ck, spark)
 
 
 def _frontier_parts(session: int, hint: int) -> int:
     if hint > _FRONTIER_SESSION_ROWS:
         return session
     return max(1, min(session, -(-hint // _FRONTIER_ROWS_PER_PARTITION)))
-
-
-@contextlib.contextmanager
-def _frontier_shuffle(spark, hint: Optional[int]):
-    """Scope spark.sql.shuffle.partitions to the measured frontier size
-    for one fixpoint round; restores the session value on exit. No-op
-    when the hint is unknown or big enough to want the session width.
-
-    The hint must bound every shuffle INPUT in the scoped plan, not just
-    the frontier rows — callers checkpoint round-invariant relations
-    (e.g. magic-step EDB distincts) BEFORE entering this scope and fold
-    their counted sizes into the hint, so a full-table shuffle can never
-    be funneled through a 1-partition exchange (round-14 ADVICE)."""
-    with _FRONTIER_LOCK:
-        conf = spark.conf
-        try:
-            session = int(conf.get("spark.sql.shuffle.partitions"))
-        except Exception:
-            yield
-            return
-        want = session if hint is None else _frontier_parts(session, int(hint))
-        if want >= session:
-            yield
-            return
-        conf.set("spark.sql.shuffle.partitions", str(want))
-        try:
-            yield
-        finally:
-            conf.set("spark.sql.shuffle.partitions", str(session))
 
 
 class RulesEnv:
